@@ -224,9 +224,16 @@ def main() -> None:
         # in the artifact, and the pick rule is fixed up front). Also
         # wall-bounded: a round at the 6M default is ~40 min, and the
         # bench must leave room for the query/ann/code sections whatever
-        # the host draws.
+        # the host draws. Default 1800 s: a 5400 s budget exceeds the
+        # 3600 s wall the bench runs under, so when round 1 read
+        # efficiency < 0.8 the ladder started a ~45-min retry it could
+        # never finish and the whole artifact was lost (r05's rc-124;
+        # reproduced when round 1 took 2,760 s). One 6M-payload round
+        # costs >= 2,300 s even in the fastest observed DRAM window, so
+        # 1800 s (< the minimum round duration) blocks exactly the retries
+        # that would be fatal.
         extra = 0
-        budget_s = float(os.environ.get("SPARK_GRAFT_SCALE_BUDGET_S", "5400"))
+        budget_s = float(os.environ.get("SPARK_GRAFT_SCALE_BUDGET_S", "1800"))
         while (
             (pick["efficiency"] < 0.8 or not _usable(pick))
             and extra < 2

@@ -247,8 +247,8 @@ def _build_e2e(tmp: str) -> None:
         os.path.join(tmp, "features.parquet"),
     )
 
-    # similarity-tier keys via the SAME kernel calls as dedupe.preprocess /
-    # features_from_corpus at the DedupConfig() contract config
+    # similarity-tier keys via the SAME kernel calls as dedupe.feature_batch
+    # at the DedupConfig() contract config
     a, b = _perm_params(cfg.num_perm, cfg.minhash_seed)
     lsh = lsh_keys_batch(
         [r["norm_title"] for r in rows], cfg.shingle_k, a, b, cfg.bands

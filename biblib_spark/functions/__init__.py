@@ -1,1 +1,1 @@
-"""Spark column builders: normalization, similarity, MinHash, SimHash."""
+"""Signature kernels: MinHash (LSH band keys) and SimHash."""

@@ -1,18 +1,25 @@
 """End-to-end tiered deduplication pipeline (SURVEY.md §2.7-2.8, §3.3).
 
 Dataflow (mirrors the reference find_duplicates_with_sources at
-src/dedupe.rs:403-500, re-expressed as 6 Spark stages):
+src/dedupe.rs:403-500, re-expressed as one Spark path):
 
-  normalize-project (M3/N1-N5)  one withColumns pass, Arrow UDFs
-  -> candidates (C1-C5)         tiered equi-joins within year blocks
+  features (M3/N1-N5)           one Arrow pass through ``feature_batch``
+  -> candidates (C1-C5, C7)     every tier key fused into one bucket key,
+                                one collect_list pair expansion
   -> verify (M4-M8)             SQL field matches + jaro/jw pandas UDF
   -> connected components (C6)  min-label propagation
   -> elect representative (M10) one window
-  -> emit (rid, cluster_id, is_unique)
+  -> emit (rid, cluster_id, is_unique, source)
+
+Both entry points run the same feature kernel and everything after it
+(``dedupe_features``). ``dedupe_corpus`` feeds the kernel citations parsed
+straight from the payload bytes and pins the feature table with a parquet
+spill; ``dedupe_records`` feeds it RECORD_COLS rows (the staged, resumable
+pipeline's input) and pins it with a localCheckpoint.
 
 Scale notes: the only O(n²) surface is within candidate buckets, which are
 capped (C7 star policy); everything else is equi-join + window. Features are
-persisted once and reused by candidates/verify/election (preprocess-once,
+materialized once and reused by candidates/verify/election (preprocess-once,
 dedupe.rs:566-590).
 """
 
@@ -20,9 +27,27 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
+from biblib_spark.functions.minhash import _perm_params, lsh_keys_batch
+from biblib_spark.functions.simhash import simhash64
+from biblib_spark.kernels.norm import (
+    format_issn,
+    format_journal_name,
+    normalize_title,
+    normalize_volume,
+)
 from biblib_spark.operators.candidates import candidate_pairs
 from biblib_spark.operators.components import assign_clusters
 from biblib_spark.operators.election import elect_representatives
@@ -32,7 +57,9 @@ from biblib_spark.operators.verify import verify_pairs
 @dataclass
 class DedupConfig:
     """Shingle/signature config is explicit: the correctness gate requires
-    identical configs between runs (BASELINE.json north_rule)."""
+    identical configs between runs (BASELINE.json north_rule). Every field
+    tunes the one feature kernel and the one candidate/verify path; only
+    ``salted_pairs`` swaps a plan (for extreme bucket skew)."""
 
     group_by_year: bool = True  # M1; default matches Deduplicator::new
     source_preferences: list[str] = field(default_factory=list)
@@ -47,29 +74,12 @@ class DedupConfig:
     # members (boilerplate titles at 10^12-row scale); AQE handles the rest
     # locally, so the default favors the single-shuffle path
     salted_pairs: bool = False
-    # pair expansion inside each candidate bucket: "agg" collect_lists the
-    # bucket then double-explodes (one shuffle, but ObjectHashAggregate's
-    # sort fallback spills object rows — 42-48 GB at 10.2M records);
-    # "join" expands via a Tungsten self-equi-join with an algebraic
-    # size/min aggregation (no object buffers, exchange reused) — identical
-    # pair set (tests/test_dedupe_spark.py strategy-identity test)
-    pair_strategy: str = "agg"
     # C1 pmid/accession identity tiers (DOI is always on). Separately
     # switchable so recall harnesses can prove the SIMILARITY tiers'
     # coverage without registry-identifier shortcuts
     pmid_accession_tiers: bool = True
     simhash_enabled: bool = True
     simhash_max_title: int = 24
-    # redundant while LSH is on (identical normalized titles -> identical
-    # signatures -> same band buckets); enable when LSH is configured off
-    exact_title_tier: bool = False
-    # collapse records into (year, norm_title) groups before the similarity
-    # tiers — wins when the exact-normalized-dup factor is high (its saving
-    # scales with records-per-distinct-title), loses otherwise (~6 extra
-    # shuffle stages of core-count-independent latency; measured 0.28
-    # scaling efficiency 8->32 cores at 1.7 records/title vs 0.95 for the
-    # flat path's single big self-join)
-    title_grouping: bool = False
     # C4 containment: candidate admission on the first/last prefix_len chars
     # of norm_title, plus a substring verify arm for pairs whose jaro falls
     # below the reference thresholds (truncated/decorated titles)
@@ -78,15 +88,6 @@ class DedupConfig:
     prefix_len: int = 24
     containment_verify: bool = True
     containment_min_len: int = 20
-    # one 64-bit bucket key (year_key folded into bkey) for the widest
-    # shuffle — see candidates.flat_candidate_pairs
-    fused_bucket_key: bool = True
-    # broadcast the narrow verify side instead of shuffling every candidate
-    # pair through two sort-merge joins. Measured a LOSS on the r06 box
-    # (189.3 vs 154.8 s at 7.65M records — hash-relation build/probe beats
-    # the saved exchanges only on bandwidth-rich hardware), so default OFF;
-    # row-count gate, 0 disables.
-    broadcast_verify_rows: int = 0
 
 
 # columns dedupe_records expects on its input; pmid / accession_number are
@@ -107,117 +108,103 @@ RECORD_COLS = [
     "abstract_text",
 ]
 
+# the feature table both entry points produce; the candidate tiers, verify
+# and election read only these columns
+FEATURE_SCHEMA = StructType(
+    [
+        StructField("rid", LongType(), False),
+        StructField("source", StringType()),
+        StructField("doi", StringType()),
+        StructField("pmid", StringType()),
+        StructField("accession_number", StringType()),
+        StructField("year", IntegerType()),
+        StructField("pages", StringType()),
+        StructField("abstract_text", StringType()),
+        StructField("norm_title", StringType()),
+        StructField("norm_journal", StringType()),
+        StructField("norm_journal_abbr", StringType()),
+        StructField("norm_volume", StringType()),
+        StructField("norm_issn", ArrayType(StringType())),
+        StructField("year_key", IntegerType(), False),
+        StructField("lsh_keys", ArrayType(LongType())),
+        StructField("simhash_keys", ArrayType(LongType())),
+    ]
+)
+_ARROW_FEATURE_SCHEMA = to_arrow_schema(FEATURE_SCHEMA)
 
-def preprocess(records: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """M3 + N1-N5 + LSH/SimHash keys in ONE mapInPandas pass.
+# citation dict keys copied into RECORD_COLS unchanged (rid, source and year
+# are derived per payload)
+_CITATION_FIELDS = [c for c in RECORD_COLS if c not in ("rid", "source", "year")]
 
-    A single Python evaluation node (one Arrow round-trip, one worker fan-out)
-    instead of seven stacked pandas-UDF projections — at local[32] the stacked
-    version was dominated by per-node Python evaluation overhead. No shuffle.
+
+def feature_batch(raw: dict[str, list], cfg: DedupConfig) -> pa.RecordBatch:
+    """RECORD_COLS value lists -> one FEATURE_SCHEMA batch: M3 + N1-N5 +
+    year_key + LSH/SimHash keys, the one feature kernel of both entry points.
+
+    Column-wise over plain Python lists, straight into pyarrow arrays — no
+    pandas Series layer between the kernels and the Arrow stream (measured
+    on a pandas version: ~20 us/record of DataFrame construction +
+    conversion the kernels never needed). MinHash runs over
+    the whole batch at once (one segmented broadcast instead of one numpy
+    round-trip per record). ``abstract_text`` is reduced to a one-char
+    presence marker — the election cascade only tests presence
+    (dedupe.rs:513-530).
     """
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from biblib_spark.functions.minhash import _perm_params, lsh_keys_batch
-    from biblib_spark.functions.simhash import simhash64
-    from biblib_spark.kernels.norm import (
-        format_issn,
-        format_journal_name,
-        normalize_title,
-        normalize_volume,
-    )
-
-    out_schema = StructType(
-        list(records.schema.fields)
-        + [
-            StructField("norm_title", StringType()),
-            StructField("norm_journal", StringType()),
-            StructField("norm_journal_abbr", StringType()),
-            StructField("norm_volume", StringType()),
-            StructField("norm_issn", ArrayType(StringType())),
-            StructField("year_key", IntegerType()),
-            StructField("lsh_keys", ArrayType(LongType())),
-            StructField("simhash_keys", ArrayType(LongType())),
-        ]
-    )
     k = cfg.shingle_k
-    num_perm, bands, seed = cfg.num_perm, cfg.bands, cfg.minhash_seed
-    group_by_year = cfg.group_by_year
-    simhash_on, sim_max = cfg.simhash_enabled, cfg.simhash_max_title
+    titles = [normalize_title(t or "") or "" for t in raw["title"]]
 
-    def _fn(batches):
-        a, b = _perm_params(num_perm, seed)
+    def journal(j):
+        return format_journal_name(j) if j is not None else None
 
-        def nt(x):
-            return (normalize_title(x) or "") if isinstance(x, str) else ""
+    def simhash_keys(t):
+        if not cfg.simhash_enabled or not t or len(t) > cfg.simhash_max_title:
+            return []
+        h = simhash64(t, k)
+        return [(q << 16 | ((h >> (16 * q)) & 0xFFFF)) for q in range(4)]
 
-        def nj(x):
-            return format_journal_name(x) if isinstance(x, str) else None
-
-        def nv(x):
-            return normalize_volume(x) if isinstance(x, str) else ""
-
-        def ni(lst):
-            if lst is None:
-                return []
-            return [f for f in (format_issn(v) for v in lst) if f is not None]
-
-        def sim(t):
-            if not simhash_on or not t or len(t) > sim_max:
-                return []
-            h = simhash64(t, k)
-            return [(q << 16 | ((h >> (16 * q)) & 0xFFFF)) for q in range(4)]
-
-        for pdf in batches:
-            titles = pdf["title"].map(nt)
-            pdf = pdf.assign(
-                norm_title=titles,
-                norm_journal=pdf["journal"].map(nj),
-                norm_journal_abbr=pdf["journal_abbr"].map(nj),
-                norm_volume=pdf["volume"].map(nv),
-                norm_issn=pdf["issn"].map(ni),
-                year_key=(
-                    pdf["year"].fillna(0).astype("int32")
-                    if group_by_year
-                    else pd.Series(0, index=pdf.index, dtype="int32")
-                ),
-                lsh_keys=pd.Series(
-                    lsh_keys_batch(titles.tolist(), k, a, b, bands),
-                    index=pdf.index,
-                ),
-                simhash_keys=titles.map(sim),
-            )
-            yield pdf
-
-    return records.mapInPandas(_fn, out_schema)
+    a, b = _perm_params(cfg.num_perm, cfg.minhash_seed)
+    years = raw["year"]
+    cols = {
+        "rid": raw["rid"],
+        "source": raw["source"],
+        "doi": raw["doi"],
+        "pmid": raw["pmid"],
+        "accession_number": raw["accession_number"],
+        "year": years,
+        "pages": raw["pages"],
+        "abstract_text": [
+            "x" if t is not None else None for t in raw["abstract_text"]
+        ],
+        "norm_title": titles,
+        "norm_journal": [journal(j) for j in raw["journal"]],
+        "norm_journal_abbr": [journal(j) for j in raw["journal_abbr"]],
+        "norm_volume": [
+            normalize_volume(v) if v is not None else "" for v in raw["volume"]
+        ],
+        "norm_issn": [
+            [f for f in map(format_issn, issns or ()) if f is not None]
+            for issns in raw["issn"]
+        ],
+        "year_key": (
+            [y or 0 for y in years] if cfg.group_by_year else [0] * len(years)
+        ),
+        "lsh_keys": lsh_keys_batch(titles, k, a, b, cfg.bands),
+        "simhash_keys": [simhash_keys(t) for t in titles],
+    }
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[f.name], type=f.type) for f in _ARROW_FEATURE_SCHEMA],
+        schema=_ARROW_FEATURE_SCHEMA,
+    )
 
 
 def dedupe_features(feat: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
-    """Preprocessed+materialized features -> (rid, cluster_id, is_unique, source)."""
+    """Materialized features -> (rid, cluster_id, is_unique, source)."""
     cfg = cfg or DedupConfig()
-    pairs = candidate_pairs(feat, cfg)
-    limit = getattr(cfg, "broadcast_verify_rows", 0)
-    broadcast_narrow = False
-    if limit:
-        try:
-            # feat arrives materialized (parquet spill / localCheckpoint),
-            # so count() is metadata/block-scan cheap — no recompute
-            broadcast_narrow = feat.count() <= limit
-        except Exception:
-            broadcast_narrow = False
     dup_edges = verify_pairs(
-        pairs,
+        candidate_pairs(feat, cfg),
         feat,
         containment=cfg.containment_verify,
         containment_min_len=cfg.containment_min_len,
-        broadcast_narrow=broadcast_narrow,
     )
     clustered = assign_clusters(feat.select("rid"), dup_edges)
     enriched = clustered.join(
@@ -225,6 +212,23 @@ def dedupe_features(feat: DataFrame, cfg: DedupConfig | None = None) -> DataFram
     )
     elected = elect_representatives(enriched, cfg.source_preferences)
     return elected.select("rid", "cluster_id", "is_unique", "source")
+
+
+def features_from_records(
+    records: DataFrame, cfg: DedupConfig | None = None
+) -> DataFrame:
+    """(RECORD_COLS) -> the feature table, one mapInArrow over
+    ``feature_batch``. Each record keeps its own rid and ``source``."""
+    cfg = cfg or DedupConfig()
+    for opt in ("pmid", "accession_number"):
+        if opt not in records.columns:
+            records = records.withColumn(opt, F.lit(None).cast("string"))
+
+    def _fn(batches):
+        for batch in batches:
+            yield feature_batch(batch.to_pydict(), cfg)
+
+    return records.select(*RECORD_COLS).mapInArrow(_fn, FEATURE_SCHEMA)
 
 
 def dedupe_records(records: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
@@ -235,14 +239,12 @@ def dedupe_records(records: DataFrame, cfg: DedupConfig | None = None) -> DataFr
     the fixture oracle).
     """
     cfg = cfg or DedupConfig()
-    for opt in ("pmid", "accession_number"):
-        if opt not in records.columns:
-            records = records.withColumn(opt, F.lit(None).cast("string"))
     # EAGERLY materialized once: the candidate tiers fan out into several
     # concurrent branches of one job, and a lazy cache would be racily
-    # recomputed by each branch (parse + MinHash x4). localCheckpoint also
-    # truncates lineage for the downstream iterative CC joins.
-    feat = preprocess(records, cfg).localCheckpoint(eager=True)
+    # recomputed by each branch (normalize + MinHash per branch).
+    # localCheckpoint also truncates lineage for the downstream iterative
+    # CC joins.
+    feat = features_from_records(records, cfg).localCheckpoint(eager=True)
     return dedupe_features(feat, cfg)
 
 
@@ -252,13 +254,13 @@ def features_from_corpus(
     record_idx_bits: int = 20,
     source_col: str | None = None,
 ) -> DataFrame:
-    """Fused fast path: corpus -> dedup features in ONE mapInPandas.
+    """Fused fast path: corpus -> dedup features in ONE mapInArrow.
 
-    Parse + flatten + normalize + MinHash/SimHash in a single Python pass —
-    one JVM<->Python Arrow round-trip instead of two, and only the ~10 slim
+    Parse + flatten + ``feature_batch`` in a single Python pass — one
+    JVM<->Python Arrow round-trip instead of two, and only the feature
     columns the matcher reads (never the full citation struct with its
-    array/map fields). ``abstract_text`` is reduced to a one-char presence
-    marker — the election cascade only tests presence (dedupe.rs:513-530).
+    array/map fields). rid = row_id << record_idx_bits | record_idx, as in
+    ``records_from_parsed``.
 
     ``source_col`` (M12 sources-zip): name of a corpus column carrying the
     per-payload source register (e.g. the registry feed a payload came from);
@@ -266,188 +268,59 @@ def features_from_corpus(
     parallel sources slice (src/dedupe.rs:403-434). When None, the detected
     format stands in.
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from biblib_spark.functions.minhash import _perm_params, lsh_keys_batch
-    from biblib_spark.functions.simhash import simhash64
-    from biblib_spark.kernels import detect
-    from biblib_spark.kernels.norm import (
-        format_issn,
-        format_journal_name,
-        normalize_title,
-        normalize_volume,
-    )
-
     cfg = cfg or DedupConfig()
-    schema = StructType(
-        [
-            StructField("rid", LongType(), False),
-            StructField("source", StringType()),
-            StructField("doi", StringType()),
-            StructField("pmid", StringType()),
-            StructField("accession_number", StringType()),
-            StructField("year", IntegerType()),
-            StructField("pages", StringType()),
-            StructField("abstract_text", StringType()),
-            StructField("norm_title", StringType()),
-            StructField("norm_journal", StringType()),
-            StructField("norm_journal_abbr", StringType()),
-            StructField("norm_volume", StringType()),
-            StructField("norm_issn", ArrayType(StringType())),
-            StructField("year_key", IntegerType(), False),
-            StructField("lsh_keys", ArrayType(LongType())),
-            StructField("simhash_keys", ArrayType(LongType())),
-        ]
-    )
-    k, num_perm, bands, seed = cfg.shingle_k, cfg.num_perm, cfg.bands, cfg.minhash_seed
-    group_by_year = cfg.group_by_year
-    simhash_on, sim_max = cfg.simhash_enabled, cfg.simhash_max_title
     shift = 1 << record_idx_bits
-
     in_cols = ["row_id", "content"] + ([source_col] if source_col else [])
 
     def _fn(batches):
-        # mapInArrow, not mapInPandas: the output side builds pyarrow
-        # arrays straight from the per-record lists — no pandas object
-        # Series layer between the Python loop and the Arrow stream
-        # (guide §4.2; measured on the pandas path: ~20 us/record of
-        # DataFrame construction + conversion the kernel never needed)
-        import pyarrow as pa
-
+        from biblib_spark.kernels import detect
         from biblib_spark.sources.parse import PARSERS
 
-        pa_schema = pa.schema(
-            [
-                pa.field("rid", pa.int64(), nullable=False),
-                pa.field("source", pa.string()),
-                pa.field("doi", pa.string()),
-                pa.field("pmid", pa.string()),
-                pa.field("accession_number", pa.string()),
-                pa.field("year", pa.int32()),
-                pa.field("pages", pa.string()),
-                pa.field("abstract_text", pa.string()),
-                pa.field("norm_title", pa.string()),
-                pa.field("norm_journal", pa.string()),
-                pa.field("norm_journal_abbr", pa.string()),
-                pa.field("norm_volume", pa.string()),
-                pa.field("norm_issn", pa.list_(pa.string())),
-                pa.field("year_key", pa.int32(), nullable=False),
-                pa.field("lsh_keys", pa.list_(pa.int64())),
-                pa.field("simhash_keys", pa.list_(pa.int64())),
-            ]
-        )
-        a, b = _perm_params(num_perm, seed)
-
-        for arrow_batch in batches:
-            names = arrow_batch.schema.names
-            row_ids = arrow_batch.column(names.index("row_id")).to_pylist()
-            contents = arrow_batch.column(names.index("content")).to_pylist()
-            cols: dict[str, list] = {f.name: [] for f in schema.fields}
-            sources = (
-                arrow_batch.column(names.index(source_col)).to_pylist()
-                if source_col
-                else row_ids
-            )
-            for row_id, content, src in zip(row_ids, contents, sources):
+        for batch in batches:
+            inp = batch.to_pydict()
+            sources = inp[source_col] if source_col else inp["row_id"]
+            rids: list[int] = []
+            srcs: list = []
+            cits: list[dict] = []
+            for row_id, content, src in zip(inp["row_id"], inp["content"], sources):
                 text = content if isinstance(content, str) else ""
                 fmt = detect.detect_format(text)
                 parser = PARSERS.get(fmt)
                 if parser is None:
                     continue
                 citations, _errors = parser(text)
-                for idx, c in enumerate(citations):
-                    nt = normalize_title(c["title"] or "") or ""
-                    year = c["date"]["year"] if c["date"] else None
-                    cols["rid"].append(int(row_id) * shift + idx)
-                    # M12 sources-zip: the per-record source register from the
-                    # user-supplied source column; detected format otherwise
-                    cols["source"].append(src if source_col else fmt)
-                    cols["doi"].append(c["doi"])
-                    cols["pmid"].append(c["pmid"])
-                    cols["accession_number"].append(c["accession_number"])
-                    cols["year"].append(year)
-                    cols["pages"].append(c["pages"])
-                    cols["abstract_text"].append(
-                        "x" if c["abstract_text"] is not None else None
-                    )
-                    cols["norm_title"].append(nt)
-                    cols["norm_journal"].append(
-                        format_journal_name(c["journal"])
-                        if c["journal"] is not None
-                        else None
-                    )
-                    cols["norm_journal_abbr"].append(
-                        format_journal_name(c["journal_abbr"])
-                        if c["journal_abbr"] is not None
-                        else None
-                    )
-                    cols["norm_volume"].append(
-                        normalize_volume(c["volume"]) if c["volume"] is not None else ""
-                    )
-                    cols["norm_issn"].append(
-                        [
-                            f
-                            for f in (format_issn(v) for v in c["issn"] or [])
-                            if f is not None
-                        ]
-                    )
-                    cols["year_key"].append(
-                        (year if year is not None else 0) if group_by_year else 0
-                    )
-                    if simhash_on and nt and len(nt) <= sim_max:
-                        h = simhash64(nt, k)
-                        cols["simhash_keys"].append(
-                            [(q << 16 | ((h >> (16 * q)) & 0xFFFF)) for q in range(4)]
-                        )
-                    else:
-                        cols["simhash_keys"].append([])
-            # batched MinHash over the whole Arrow batch (one segmented
-            # broadcast instead of one numpy round-trip per record)
-            cols["lsh_keys"] = lsh_keys_batch(cols["norm_title"], k, a, b, bands)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols[f.name], type=f.type)
-                    for f in pa_schema
-                ],
-                schema=pa_schema,
-            )
+                base = int(row_id) * shift
+                rids.extend(range(base, base + len(citations)))
+                srcs.extend([src if source_col else fmt] * len(citations))
+                cits.extend(citations)
+            raw = {f: [c[f] for c in cits] for f in _CITATION_FIELDS}
+            raw["rid"] = rids
+            raw["source"] = srcs
+            raw["year"] = [c["date"]["year"] if c["date"] else None for c in cits]
+            yield feature_batch(raw, cfg)
 
-    return corpus.select(*in_cols).mapInArrow(_fn, schema)
+    return corpus.select(*in_cols).mapInArrow(_fn, FEATURE_SCHEMA)
 
 
 def dedupe_corpus(
     corpus: DataFrame,
     cfg: DedupConfig | None = None,
     source_col: str | None = None,
-    materialize: str = "parquet",
 ) -> DataFrame:
     """Corpus table -> clusters via the fused fast path.
 
-    ``materialize`` picks how the feature table (which fans out nine ways —
-    six candidate tiers, two verify sides, the election join) is pinned:
-
-    - ``"parquet"`` (default): columnar spill on the shuffle-local dir
-      (plans/spill.py) — each consumer prunes to the columns it reads
-      (the tiers read 8 of 16, the election join 4), where a checkpoint
-      hands every branch every column;
-    - ``"checkpoint"``: ``localCheckpoint`` block-manager materialization
-      (no temp files — used by tests that run many tiny pipelines).
+    The feature table fans out (the candidate key scan, two verify sides,
+    the election join), so it is pinned as a columnar spill on the
+    shuffle-local dir (plans/spill.py): each consumer prunes to the columns
+    it reads (the key scan reads 8 of 16, the election join 4), where a
+    checkpoint hands every branch every column.
     """
-    cfg = cfg or DedupConfig()
-    feat = features_from_corpus(corpus, cfg, source_col=source_col)
-    if materialize == "parquet":
-        from biblib_spark.plans.spill import spill_to_parquet
+    from biblib_spark.plans.spill import spill_to_parquet
 
-        feat, _ = spill_to_parquet(feat, "dedup-features")
-    else:
-        feat = feat.localCheckpoint(eager=True)
+    cfg = cfg or DedupConfig()
+    feat, _ = spill_to_parquet(
+        features_from_corpus(corpus, cfg, source_col=source_col), "dedup-features"
+    )
     return dedupe_features(feat, cfg)
 
 

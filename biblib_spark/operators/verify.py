@@ -173,7 +173,6 @@ def verify_pairs(
     containment: bool = False,
     containment_min_len: int = 20,
     narrow_first: bool = True,
-    broadcast_narrow: bool = False,
 ) -> DataFrame:
     """Candidate pairs (a, b) -> verified duplicate pairs (a, b).
 
@@ -224,16 +223,9 @@ def verify_pairs(
     # inside the sim UDF (vectorized a != b mask; equal rows skip the block
     # kernel), so the narrow join carries the titles directly.
     narrow = feat.select("rid", "norm_title", "doi")
-    side_a, side_b = _side_cols(narrow, "a"), _side_cols(narrow, "b")
-    if broadcast_narrow:
-        # measured a LOSS on the r06 box (189.3 s vs 154.8 s at 7.65M
-        # records): building + probing two ~700 MB hash relations costs
-        # more DRAM traffic than the two sort-merge exchanges it removes.
-        # Kept as an opt-in for genuinely skew-free small-feature cases.
-        side_a, side_b = F.broadcast(side_a), F.broadcast(side_b)
     j1 = (
-        pairs.join(side_a, pairs["a"] == F.col("a_rid"))
-        .join(side_b, pairs["b"] == F.col("b_rid"))
+        pairs.join(_side_cols(narrow, "a"), pairs["a"] == F.col("a_rid"))
+        .join(_side_cols(narrow, "b"), pairs["b"] == F.col("b_rid"))
     )
     both_doi, doi_eq = _doi_presence()
     # exact per-pair minimum any arm could accept

@@ -13,7 +13,7 @@ Spilled directories are deleted at session exit (atexit); callers that loop
 (bench repeats) should call ``cleanup`` eagerly so tmpfs does not accumulate.
 A process that dies hard (OOM, kill -9) never runs its atexit hook, so the
 first spill of a NEW process also sweeps spill dirs whose mtime is older
-than ``SPARK_GRAFT_SPILL_STALE_H`` hours (default 2) — on a tmpfs local dir
+than ``_STALE_S`` (2 hours) — on a tmpfs local dir
 those orphans are resident RAM, and a few crashed sessions' leftovers
 (observed: 4.8 GB) shrink the headroom every later job runs in.
 """
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 
 _LIVE: set[str] = set()
 _SWEPT = False
+_STALE_S = 2 * 3600
 
 
 def _sweep_stale(path: str) -> None:
@@ -41,7 +42,6 @@ def _sweep_stale(path: str) -> None:
     if _SWEPT:
         return
     _SWEPT = True
-    stale_s = float(os.environ.get("SPARK_GRAFT_SPILL_STALE_H", "2")) * 3600
     now = time.time()
     try:
         entries = os.listdir(path)
@@ -52,7 +52,7 @@ def _sweep_stale(path: str) -> None:
         if p in _LIVE:
             continue
         try:
-            if now - os.path.getmtime(p) > stale_s:
+            if now - os.path.getmtime(p) > _STALE_S:
                 shutil.rmtree(p, ignore_errors=True)
         except OSError:
             continue

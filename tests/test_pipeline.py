@@ -6,6 +6,8 @@ import os
 import shutil
 import tempfile
 
+import pytest
+
 from biblib_spark.corpus import make_corpus
 from biblib_spark.plans.checkpoint import read_marker
 from biblib_spark.plans.pipeline import run_pipeline
@@ -185,6 +187,30 @@ def test_fused_path_matches_staged_path(spark):
     s = {(r.rid, r.cluster_id, r.is_unique) for r in staged.collect()}
     f = {(r.rid, r.cluster_id, r.is_unique) for r in fused.collect()}
     assert s == f and len(s) > 0
+
+
+@pytest.mark.parametrize("seed", [42, 5])
+def test_record_features_equal_corpus_features(spark, seed):
+    """Both entry points run one feature kernel: the staged path's feature
+    table (parse -> records_from_parsed -> features_from_records) equals the
+    fused path's (features_from_corpus) in every column but ``source``,
+    which is the record's own (NULL here) vs. the detected format."""
+    from biblib_spark.operators.dedupe import (
+        features_from_corpus,
+        features_from_records,
+        records_from_parsed,
+    )
+    from biblib_spark.sources.parse import parse_corpus
+
+    corpus = make_corpus(spark, 200, seed=seed)
+    staged = features_from_records(records_from_parsed(parse_corpus(corpus)))
+    fused = features_from_corpus(corpus)
+    assert staged.columns == fused.columns
+    staged = staged.drop("source").localCheckpoint(eager=True)
+    fused = fused.drop("source").localCheckpoint(eager=True)
+    assert staged.count() == fused.count() > 0
+    assert staged.exceptAll(fused).count() == 0
+    assert fused.exceptAll(staged).count() == 0
 
 
 def test_explicit_source_column_drives_preferences(spark):
