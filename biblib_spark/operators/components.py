@@ -6,75 +6,116 @@ one connected component: CC reproduces 100% of reference dup-pairs (recall
 1.0 >= 0.99); CC may merge additional near-pairs, which the stated metric
 (dup-pair recall) does not penalize — SURVEY.md §2.8 C6.
 
-Algorithm: iterative min-label propagation. label(v) starts at v; each round
-label(v) := min(label(v), min over neighbors). Labels are monotonically
-non-increasing and bounded, so the global sum of labels is a convergence
-certificate: one cheap agg per round, no change-count join. Rounds ~ cluster
-diameter; duplicate clusters are star/clique shaped (diameter <= ~3).
-``localCheckpoint`` per round truncates lineage (SURVEY.md §4).
+Algorithm: contraction levels of partition-local union-find (after *BTS:
+Load-Balanced Distributed Union-Find*, ICDE 2024). Each level hash-partitions
+its edges by ``a``, runs one vectorized union-find per partition
+(``_union_find``: label = min rid of the vertex's local component), and
+groups by ``rid``. A vertex whose edges landed in several partitions carries
+several labels; those boundary vertices link their labels, and the label
+graph is the next level's edge list. Each level's labels are composed back
+onto the vertices with a left join. One ``localCheckpoint`` per level is its
+only action; a ``DataFrame.observe`` counts the boundary inside it.
 
-Job-count discipline (the loop's cost at scale is scheduling + checkpoint
-latency, not compute): round 1 is FREE — folded into the label-init
-aggregation (label0(v) = min(v, min neighbor) instead of distinct-vertices),
-and convergence is checked after every round, so a diameter-2 component
-(every star, most cliques) finishes with init + one confirm round where the
-round-1 code paid a distinct + four propagation rounds + two certificates.
+Level 0 lets AQE coalesce the partitions by bytes, so a small edge list is
+one partition and exact in one level. (AQE favours parallelism: 150k
+flagship-like edges still spread over several partitions on 4 cores.) Level
+``k >= 1`` uses at most ``shuffle.partitions >> k`` partitions, so the last
+level is one partition and exact: the loop ends in at most ``bit_length``
+levels. The boundary count sizes the next level, and a boundary below
+``_BOUNDARY_PER_TASK`` vertices is one partition, which makes two levels the
+bound for such inputs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+_LABELS = "rid long, label long"
+# boundary vertices one union-find task takes at levels >= 1: a boundary
+# below this is one partition, so its level is exact and the last
+_BOUNDARY_PER_TASK = 1 << 20
 
-def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+
+def _union_find(batches):
+    """mapInArrow kernel: one partition's (a, b) edges -> (rid, label) for
+    every vertex in them, label = min rid of its component in this partition.
+
+    Hook-and-jump over dense vertex indices: each round every edge hooks the
+    larger of its two roots onto the smaller, then pointer jumping flattens
+    every tree onto its root. Parents only decrease, so each root is the min
+    index — the min rid, since ``np.unique`` sorts — of its tree.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    batches = list(batches)
+    if not batches:
+        return
+    a = np.concatenate([batch.column(0).to_numpy() for batch in batches])
+    b = np.concatenate([batch.column(1).to_numpy() for batch in batches])
+    rids, ends = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = ends[: a.size], ends[a.size :]
+    parent = np.arange(rids.size)
+    while True:
+        ra, rb = parent[ia], parent[ib]
+        open_ = ra != rb
+        if not open_.any():
+            break
+        # an edge inside one tree stays inside it: drop it for good
+        ia, ib, ra, rb = ia[open_], ib[open_], ra[open_], rb[open_]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(rids), pa.array(rids[parent])], names=["rid", "label"]
+    )
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """Edges (a, b) -> (rid, cluster_id) for every vertex in the edge list.
 
     cluster_id = min rid of the component.
     """
-    sym = edges.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    sym = sym.localCheckpoint(eager=True)
-
-    def _cert(lbl):
-        # decimal(38,0) sum: rids reach ~2^63 at 10^12-record scale, where a
-        # LongType sum would wrap silently (non-ANSI) and could fake a fixpoint
-        return lbl.agg(
-            F.sum(F.col("label").cast("decimal(38,0)"))
-        ).collect()[0][0]
-
-    # label init IS propagation round 1: every vertex appears as src (both
-    # edge directions are present), so min(self, min neighbor) needs only the
-    # one aggregation shuffle the vertex-distinct would have cost anyway
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("_mn"))
-        .select(F.col("src").alias("rid"), F.least("src", "_mn").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = _cert(labels)
-
-    def one_round(lbl):
-        # each vertex receives its neighbors' current labels
-        msgs = sym.join(lbl, sym["dst"] == lbl["rid"]).select(
-            F.col("src").alias("rid"), "label"
+    parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    level_edges = edges.select(F.col("a").cast("long"), F.col("b").cast("long"))
+    labels, n_boundary = None, 0
+    for level in range(parts.bit_length()):
+        spread = (
+            level_edges.repartition("a")
+            if level == 0
+            else level_edges.repartition(
+                max(1, min(parts >> level, n_boundary // _BOUNDARY_PER_TASK)), "a"
+            )
         )
-        return (
-            lbl.select("rid", "label")
-            .unionByName(msgs)
+        boundary = Observation()
+        per_vertex = (
+            spread.mapInArrow(_union_find, _LABELS)
             .groupBy("rid")
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label"), F.collect_set("label").alias("labels"))
+            .observe(boundary, F.count(F.when(F.size("labels") > 1, 1)).alias("n"))
+            .localCheckpoint(eager=True)
         )
-
-    for _ in range(max_iter):
-        labels = one_round(labels).localCheckpoint(eager=True)
-        cur_sum = _cert(labels)
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-
-    return labels.select("rid", F.col("label").alias("cluster_id"))
+        if labels is None:
+            labels = per_vertex.select("rid", "label")
+        else:
+            up = per_vertex.select(F.col("rid").alias("label"), F.col("label").alias("_up"))
+            labels = labels.join(up, "label", "left").select(
+                "rid", F.coalesce("_up", "label").alias("label")
+            )
+        n_boundary = boundary.get["n"]
+        if n_boundary == 0:
+            return labels.select("rid", F.col("label").alias("cluster_id"))
+        level_edges = per_vertex.filter(F.size("labels") > 1).select(
+            F.col("label").alias("a"), F.explode("labels").alias("b")
+        )
+    raise RuntimeError(
+        f"connected_components: boundary left after the one-partition level "
+        f"{parts.bit_length() - 1}"
+    )
 
 
 def assign_clusters(all_rids: DataFrame, edges: DataFrame) -> DataFrame:

@@ -7,7 +7,7 @@ src/dedupe.rs:403-500, re-expressed as one Spark path):
   -> candidates (C1-C5, C7)     every tier key fused into one bucket key,
                                 one collect_list pair expansion
   -> verify (M4-M8)             SQL field matches + jaro/jw pandas UDF
-  -> connected components (C6)  min-label propagation
+  -> connected components (C6)  partition-local union-find
   -> elect representative (M10) one window
   -> emit (rid, cluster_id, is_unique, source)
 
@@ -242,8 +242,6 @@ def dedupe_records(records: DataFrame, cfg: DedupConfig | None = None) -> DataFr
     # EAGERLY materialized once: the candidate tiers fan out into several
     # concurrent branches of one job, and a lazy cache would be racily
     # recomputed by each branch (normalize + MinHash per branch).
-    # localCheckpoint also truncates lineage for the downstream iterative
-    # CC joins.
     feat = features_from_records(records, cfg).localCheckpoint(eager=True)
     return dedupe_features(feat, cfg)
 

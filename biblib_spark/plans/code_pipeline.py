@@ -14,7 +14,8 @@ Stage split rationale (what a resume actually saves at 10^12 files):
   repeat; its output is slim (rid, lang, sha, norm_hash, ctoks).
 - ``edges``: all four candidate tiers + JVM verifies — the shuffle-heavy
   stage; output is a tiny (a, b) long-pair table.
-- ``clusters``: iterative connected components + size join.
+- ``clusters``: connected components (partition-local union-find) + size
+  join.
 
 Reference parity: biblib has no resume (batch library, src/dedupe.rs); the
 stage/marker discipline mirrors the citation arm (plans/pipeline.py) per the

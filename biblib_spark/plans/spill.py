@@ -7,7 +7,7 @@ join) but no consumer reads more than ~half its columns — a parquet spill on
 the shuffle-local dir (tmpfs in this sandbox, executor-local NVMe on a real
 cluster) gives each consumer columnar pruning plus lightweight compression at
 the cost of one write job, and like a checkpoint it truncates lineage so the
-iterative CC joins replan against a flat scan.
+downstream joins replan against a flat scan.
 
 Spilled directories are deleted at session exit (atexit); callers that loop
 (bench repeats) should call ``cleanup`` eagerly so tmpfs does not accumulate.
