@@ -1,133 +1,48 @@
-"""Stage checkpointing with per-partition lineage markers (C8, SURVEY.md §2.8).
+"""Stage checkpointing with per-partition lineage (C8, SURVEY.md §2.8).
 
-Each stage writes parquet plus a ``_STAGE_OK`` JSON marker carrying:
+Every resumable stage is an IceTable (plans/icetable.py): a stage output is
+one ``overwrite`` snapshot commit whose header carries
 
-- total row count,
-- the input lineage dict the stage was built from (so resuming a work_dir
-  against *different* input is detected, not silently skipped),
-- per-partition (per output file) row counts and content-hash XORs — the
+- the input lineage dict the stage was built from (``summary.lineage``), so
+  resuming a work_dir against *different* input or config is detected, not
+  silently skipped,
+- per data file row counts and content-hash XORs (the manifest) — the
   north_rule's "checkpoints per-partition lineage + metrics": a resumed run
   re-derives the per-file counters and refuses to trust a stage whose files
-  were tampered with / partially lost.
+  were tampered with or partially lost.
 
-``run_stage`` skips stages whose marker exists AND whose lineage matches AND
-whose per-partition counters verify; otherwise it rebuilds. Iceberg is the
-target table format on a real cluster (snapshot metadata plays the marker's
-role); the sandbox falls back to plain parquet behind this same interface
-(SURVEY.md §7.3). The verify pass is one column-pruned scan of the stage
-output — at 100 TB you would verify counts-only (footer metadata) per file
-and sample the content hash; both are derived from the same marker payload.
+The verify pass is one column-pruned scan of the stage output — at 100 TB
+you would verify counts-only (footer metadata) per file and sample the
+content hash; both are derived from the same manifest.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MARKER = "_STAGE_OK"
+from biblib_spark.plans.icetable import IceTable
 
 
 class StageIntegrityError(RuntimeError):
     """A completed stage's files no longer match its recorded lineage."""
 
 
-def stage_done(path: str) -> bool:
-    return os.path.exists(os.path.join(path, MARKER))
-
-
-def _hashable(dt) -> bool:
-    """Spark prohibits hash expressions over MAP (iteration order unstable)."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    if isinstance(dt, MapType):
-        return False
-    if isinstance(dt, ArrayType):
-        return _hashable(dt.elementType)
-    if isinstance(dt, StructType):
-        return all(_hashable(f.dataType) for f in dt.fields)
-    return True
-
-
-def _partition_stats(df: DataFrame) -> dict[str, dict]:
-    """Per output-file row count + order-insensitive content-hash XOR.
-
-    xor (not sum) so the fold can't overflow; xxhash64 over every hashable
-    column fingerprints content, not just shape (map-typed columns are
-    excluded — Spark prohibits hashing them; row counts still cover them).
-    """
-    cols = [f.name for f in df.schema.fields if _hashable(f.dataType)]
-    hexpr = (
+def input_lineage(df: DataFrame, cols: list[str]) -> dict:
+    """Row count + order-insensitive hash of every input column a pipeline
+    reads: a changed ``row_id`` or source register is a changed input even
+    when the content is not. xor of per-row 64-bit hashes (xor, not sum —
+    sum overflows long under ANSI mode)."""
+    row = df.select(
+        F.count(F.lit(1)).alias("n"),
         F.expr(
-            "bit_xor(xxhash64("
-            + ", ".join(f"`{c}`" for c in cols)  # reserved-word-safe
-            + "))"
-        )
-        if cols
-        else F.lit(0)
-    )
-    rows = (
-        df.groupBy(F.input_file_name().alias("f"))
-        .agg(F.count(F.lit(1)).alias("rows"), hexpr.alias("hxor"))
-        .collect()
-    )
-    return {
-        os.path.basename(r["f"]): {"rows": r["rows"], "hxor": int(r["hxor"] or 0)}
-        for r in rows
-    }
-
-
-def write_stage(df: DataFrame, path: str, lineage: dict | None = None) -> dict:
-    """Write a stage output + marker. Returns the marker payload."""
-    df.write.mode("overwrite").parquet(path)
-    spark = df.sparkSession
-    parts = _partition_stats(spark.read.parquet(path))
-    payload = {
-        "rows": sum(p["rows"] for p in parts.values()),
-        "written_at": time.time(),
-        "lineage": lineage or {},
-        "partitions": parts,
-    }
-    with open(os.path.join(path, MARKER), "w") as f:
-        json.dump(payload, f)
-    return payload
-
-
-def read_marker(path: str) -> dict:
-    with open(os.path.join(path, MARKER)) as f:
-        return json.load(f)
-
-
-def verify_stage(spark: SparkSession, path: str) -> list[str]:
-    """Recompute per-partition counters and diff against the marker.
-
-    Returns a list of problems (empty = stage verifies). Missing, extra, or
-    content-drifted files are each reported.
-    """
-    marker = read_marker(path)
-    expected = marker.get("partitions")
-    if expected is None:  # legacy marker without per-partition lineage
-        n = spark.read.parquet(path).count()
-        return [] if n == marker["rows"] else [f"rows {n} != {marker['rows']}"]
-    actual = _partition_stats(spark.read.parquet(path))
-    problems = []
-    for fname, exp in expected.items():
-        got = actual.get(fname)
-        if got is None:
-            problems.append(f"missing partition {fname}")
-        elif got != exp:
-            problems.append(
-                f"partition {fname}: rows {got['rows']}/{exp['rows']},"
-                f" hxor {got['hxor']}/{exp['hxor']}"
-            )
-    for fname in actual:
-        if fname not in expected:
-            problems.append(f"unexpected partition {fname}")
-    return problems
+            "bit_xor(xxhash64(" + ", ".join(f"`{c}`" for c in cols) + "))"
+        ).alias("hxor"),
+    ).collect()[0]
+    return {"input_rows": row["n"], "input_hash_xor": int(row["hxor"] or 0)}
 
 
 def run_stage(
@@ -135,28 +50,27 @@ def run_stage(
     path: str,
     build: Callable[[], DataFrame],
     lineage: dict | None = None,
-    verify_on_resume: bool = True,
-    on_corrupt: str = "raise",
 ) -> DataFrame:
-    """Build-or-resume one stage.
+    """Build-or-resume one stage, checkpointed as an IceTable at ``path``.
 
-    Resume requires (1) the marker exists, (2) its recorded lineage equals the
-    lineage of the CURRENT input — resuming a work_dir against changed input
-    rebuilds instead of returning stale results — and (3) per-partition
-    counters verify (``verify_on_resume``). A verification failure raises
-    ``StageIntegrityError`` by default (``on_corrupt='rebuild'`` rebuilds).
+    Resume requires a committed snapshot whose recorded lineage equals the
+    lineage of the CURRENT input (a resume against changed input rebuilds
+    instead of returning stale results) and whose manifest verifies (per-file
+    rows + content-hash XOR); a verification failure raises
+    ``StageIntegrityError``. A rebuild is an ``overwrite`` commit: the
+    superseded snapshot and its data files stay on disk, time-travelable,
+    until ``IceTable.expire_snapshots``.
     """
-    if stage_done(path):
-        marker = read_marker(path)
-        if marker.get("lineage", {}) != (lineage or {}):
-            write_stage(build(), path, lineage)
-        elif verify_on_resume:
-            problems = verify_stage(spark, path)
-            if problems:
-                if on_corrupt == "rebuild":
-                    write_stage(build(), path, lineage)
-                else:
-                    raise StageIntegrityError(f"{path}: {'; '.join(problems)}")
+    table = IceTable(path)
+    # compare as stored: a JSON round-trip turns tuples into lists
+    lineage = json.loads(json.dumps(lineage or {}))
+    if (
+        table.current_version() > 0
+        and table.snapshot()["summary"].get("lineage") == lineage
+    ):
+        problems = table.verify(spark)
+        if problems:
+            raise StageIntegrityError(f"{path}: {'; '.join(problems)}")
     else:
-        write_stage(build(), path, lineage)
-    return spark.read.parquet(path)
+        table.overwrite(build(), summary={"lineage": lineage})
+    return table.read(spark)

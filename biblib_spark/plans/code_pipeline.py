@@ -1,11 +1,12 @@
 """Resumable code-clone pipeline: files -> features -> edges -> clusters.
 
 The north_rule's checkpoint discipline applied to the code arm: every stage
-writes parquet + a ``_STAGE_OK`` marker with per-partition row counts and
+is an IceTable snapshot whose manifest carries per-file row counts and
 content-hash XORs (plans/checkpoint.py, C8), so a killed job re-submitted
 with the same ``work_dir`` resumes after the last completed stage, a resume
-against *different* input rebuilds, and a stage whose files were tampered
-with or partially lost is refused.
+against *different* input (any of ``row_id``, ``lang``, ``content``)
+rebuilds, and a stage whose files were tampered with or partially lost is
+refused.
 
 Stage split rationale (what a resume actually saves at 10^12 files):
 
@@ -18,7 +19,7 @@ Stage split rationale (what a resume actually saves at 10^12 files):
   join.
 
 Reference parity: biblib has no resume (batch library, src/dedupe.rs); the
-stage/marker discipline mirrors the citation arm (plans/pipeline.py) per the
+stage discipline mirrors the citation arm (plans/pipeline.py) per the
 north_rule's "resumable from checkpoint with per-partition lineage" clause.
 """
 
@@ -27,23 +28,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from biblib_spark.operators.codedup import (
     clusters_from_edges,
     code_dup_edges,
     code_features,
 )
-from biblib_spark.plans.checkpoint import run_stage
-
-
-def _input_fingerprint(files: DataFrame) -> dict:
-    row = files.select(
-        F.count(F.lit(1)).alias("n"),
-        # order-insensitive: xor of per-row 64-bit content hashes
-        F.expr("bit_xor(xxhash64(content))").alias("hxor"),
-    ).collect()[0]
-    return {"input_rows": row["n"], "input_hash_xor": int(row["hxor"] or 0)}
+from biblib_spark.plans.checkpoint import input_lineage, run_stage
 
 
 def run_code_pipeline(
@@ -54,7 +45,7 @@ def run_code_pipeline(
     ``files`` must have the input_hint shape
     ``(row_id, repo, path, commit, lang, content)``.
     """
-    lineage = _input_fingerprint(files)
+    lineage = input_lineage(files, ["row_id", "lang", "content"])
 
     feat = run_stage(
         spark,

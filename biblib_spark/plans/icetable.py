@@ -1,32 +1,36 @@
 """Iceberg-style snapshot table format (sandbox-local, parquet-backed).
 
-The north_rule targets an Iceberg table; plans/checkpoint.py notes that on a
-real cluster "snapshot metadata plays the marker's role" (SURVEY.md §7.3).
-This module implements the part of the Iceberg spec that the checkpoint
-markers have been standing in for — so stage outputs and streaming edge logs
-get ATOMIC commits, snapshot isolation, and time travel with no extra scan:
+The north_rule targets an Iceberg table. This module implements the part of
+the Iceberg spec that a resumable pipeline needs, and it is the one format
+of every resumable stage (``plans/checkpoint.run_stage``) and of the
+streaming edge log (``streaming/stateful.py``): ATOMIC commits, snapshot
+isolation, and time travel with no extra scan.
 
 table_dir/
   data/<commit-uuid>/part-*.parquet      immutable data files, one dir per commit
   metadata/v<N>.metadata.json            one snapshot per committed version:
                                          schema, operation, parent version,
+                                         summary (a stage's input lineage),
                                          manifest = [{path, rows, hxor}, ...]
   metadata/version-hint.text             current version N (atomic rename swap)
 
+Manifest paths are relative to ``table_dir`` (``data/<uuid>/part-*``), so a
+table moved with its directory still reads and verifies.
+
 Commit protocol (the Iceberg optimistic-concurrency core, spec §Table
 Metadata): writers never mutate existing files; a commit (1) writes its data
-files under a fresh uuid dir, (2) writes v<N+1>.metadata.json with
-O_CREAT|O_EXCL — losing a race raises and the committer re-reads the current
-version and retries on top of it, (3) swaps version-hint via rename (POSIX
-atomic). Readers resolve version-hint (or an explicit snapshot id) and read
-EXACTLY that manifest's file list — a concurrent append can never produce a
-torn read, and an abandoned writer leaves only unreferenced files that
-``expire_snapshots`` sweeps.
+files under a fresh uuid dir, (2) claims v<N+1>.metadata.json by
+hard-linking a fully written temp file to it — the link fails iff the
+version is taken, and the loser re-reads the current version and retries on
+top of it, (3) swaps version-hint via rename (POSIX atomic). Readers resolve
+version-hint (or an explicit snapshot id) and read EXACTLY that manifest's
+file list — a concurrent append can never produce a torn read, and an
+abandoned writer leaves only unreferenced files that ``expire_snapshots``
+sweeps.
 
-The manifest carries per-file row counts + content-hash XORs — the same
-per-partition lineage the _STAGE_OK markers record (checkpoint.py
-``_partition_stats``), so ``verify()`` gives checkpoint-grade tamper
-detection over any snapshot.
+The manifest carries per-file row counts + content-hash XORs (``_file_stats``,
+the per-partition lineage of C8), so ``verify()`` detects a tampered, lost or
+truncated data file in any snapshot.
 
 At 100 TB: manifests here are single JSON files, fine for 10^3-10^5 data
 files per table (a 4M-payload stage output is ~32-200 files); real Iceberg
@@ -43,6 +47,7 @@ import random
 import re
 import time
 import uuid
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,15 +56,27 @@ class CommitConflict(RuntimeError):
     """Another writer committed this version first (optimistic concurrency)."""
 
 
-class SnapshotIntegrityError(RuntimeError):
-    """A snapshot's data files no longer match its manifest."""
+def _hashable(dt) -> bool:
+    """Spark prohibits hash expressions over MAP (iteration order unstable)."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    if isinstance(dt, MapType):
+        return False
+    if isinstance(dt, ArrayType):
+        return _hashable(dt.elementType)
+    if isinstance(dt, StructType):
+        return all(_hashable(f.dataType) for f in dt.fields)
+    return True
 
 
 def _file_stats(df: DataFrame) -> list[dict]:
-    """Per-data-file manifest entries: full path, rows, content-hash XOR
-    (order-insensitive; same fold as checkpoint._partition_stats)."""
-    from biblib_spark.plans.checkpoint import _hashable
+    """Per-data-file entries: local path, rows, content-hash XOR.
 
+    xor (not sum) so the fold can't overflow; xxhash64 over every hashable
+    column fingerprints content, not just shape (map-typed columns are
+    excluded, row counts still cover them). ``input_file_name()`` is a URI,
+    so the path is percent-decoded: a table dir with a space or ``%`` in it
+    must name the file that is on disk."""
     from pyspark.sql import functions as F
 
     cols = [f.name for f in df.schema.fields if _hashable(f.dataType)]
@@ -75,13 +92,14 @@ def _file_stats(df: DataFrame) -> list[dict]:
         .agg(F.count(F.lit(1)).alias("rows"), hexpr.alias("hxor"))
         .collect()
     )
-    out = []
-    for r in rows:
-        path = r["f"]
-        # input_file_name returns a URI; normalize to a local path
-        if path.startswith("file:"):
-            path = path[len("file:"):]
-        out.append({"path": path, "rows": r["rows"], "hxor": int(r["hxor"] or 0)})
+    out = [
+        {
+            "path": unquote(urlparse(r["f"]).path),
+            "rows": r["rows"],
+            "hxor": int(r["hxor"] or 0),
+        }
+        for r in rows
+    ]
     return sorted(out, key=lambda e: e["path"])
 
 
@@ -137,6 +155,12 @@ class IceTable:
             raise FileNotFoundError(f"{self.dir}: no committed snapshot")
         with open(self._meta_path(v)) as f:
             return json.load(f)
+
+    def files(self, snap: dict) -> list[str]:
+        """Local paths of a snapshot's data files. Entries are relative to
+        the table dir; an absolute entry (tables committed before manifests
+        went relative) joins to itself."""
+        return [os.path.join(self.dir, e["path"]) for e in snap["manifest"]]
 
     def snapshots(self) -> list[dict]:
         """All committed snapshot headers, oldest first (time-travel index).
@@ -214,13 +238,19 @@ class IceTable:
         raise CommitConflict(f"{self.dir}: lost {retries} commit races")
 
     def _write_data(self, df: DataFrame) -> list[dict]:
-        commit_dir = os.path.join(self.data_dir, uuid.uuid4().hex)
+        commit = os.path.join("data", uuid.uuid4().hex)
+        commit_dir = os.path.join(self.dir, commit)
         df.write.mode("error").parquet(commit_dir)
         # an all-empty write leaves no part files (only _SUCCESS) — an empty
         # manifest is a legal commit (e.g. an empty streaming microbatch)
         if not any(f.endswith(".parquet") for f in os.listdir(commit_dir)):
             return []
-        return _file_stats(df.sparkSession.read.parquet(commit_dir))
+        # manifest paths are relative to the table dir, so a moved table
+        # (or work_dir) still resolves its data files
+        return [
+            {**e, "path": os.path.join(commit, os.path.basename(e["path"]))}
+            for e in _file_stats(df.sparkSession.read.parquet(commit_dir))
+        ]
 
     def append(self, df: DataFrame, summary: dict | None = None) -> dict:
         """Atomically add ``df``'s rows to the table (streaming edge-log shape)."""
@@ -239,7 +269,7 @@ class IceTable:
         """Scan exactly one snapshot's manifest (default: current). Torn
         reads are impossible: the file list is frozen in the metadata json."""
         snap = self.snapshot(version)
-        files = [e["path"] for e in snap["manifest"]]
+        files = self.files(snap)
         if not files:
             # a legal state, not an error: e.g. a stage whose output is
             # genuinely empty, or an edge log whose only microbatches were
@@ -263,7 +293,10 @@ class IceTable:
         """Checkpoint-grade integrity: recompute per-file rows/hash-XOR and
         diff against the manifest. Empty list = snapshot verifies."""
         snap = self.snapshot(version)
-        expected = {e["path"]: e for e in snap["manifest"]}
+        expected = {
+            os.path.abspath(p): e
+            for p, e in zip(self.files(snap), snap["manifest"])
+        }
         missing = [p for p in expected if not os.path.exists(p)]
         problems = [f"missing data file {p}" for p in missing]
         live = [p for p in expected if p not in missing]
@@ -271,7 +304,8 @@ class IceTable:
         if live:
             try:
                 actual = {
-                    e["path"]: e for e in _file_stats(spark.read.parquet(*live))
+                    os.path.abspath(e["path"]): e
+                    for e in _file_stats(spark.read.parquet(*live))
                 }
             except Exception:
                 # a corrupted file aborts the batch scan (e.g. Hadoop local
@@ -325,15 +359,14 @@ class IceTable:
         cutoff = max(1, current - keep_last + 1)
         keep_files: set[str] = set()
         for v in range(cutoff, current + 1):
-            keep_files.update(e["path"] for e in self.snapshot(v)["manifest"])
+            keep_files.update(self.files(self.snapshot(v)))
         deleted = []
         for v in range(1, cutoff):
             try:
-                manifest = self.snapshot(v)["manifest"]
+                files = self.files(self.snapshot(v))
             except FileNotFoundError:
                 continue  # already expired by an earlier sweep
-            for e in manifest:
-                p = e["path"]
+            for p in files:
                 if p not in keep_files and os.path.exists(p):
                     os.remove(p)
                     deleted.append(p)
@@ -361,45 +394,3 @@ def read_table_or_parquet(spark: SparkSession, path: str) -> DataFrame:
     if table.current_version() > 0:
         return table.read(spark)
     return spark.read.parquet(path)
-
-
-def run_stage_ice(
-    spark: SparkSession,
-    table_dir: str,
-    build,
-    lineage: dict | None = None,
-    verify_on_resume: bool = True,
-    on_corrupt: str = "raise",
-) -> DataFrame:
-    """Build-or-resume one pipeline stage with an IceTable as the checkpoint
-    (the north_rule's "checkpoints per-partition lineage + counters to
-    Iceberg"; same contract as checkpoint.run_stage, snapshot metadata
-    playing the _STAGE_OK marker's role):
-
-    - resume requires a committed snapshot whose recorded input lineage
-      equals the CURRENT input's (a resume against changed input rebuilds,
-      never returns stale results) and whose manifest verifies
-      (per-file rows + content-hash XOR);
-    - a rebuild is an ``overwrite`` COMMIT, not an rm-rf: the superseded
-      snapshot stays time-travelable until ``expire_snapshots``;
-    - verification failure raises ``SnapshotIntegrityError`` by default
-      (``on_corrupt='rebuild'`` recommits instead).
-    """
-    table = IceTable(table_dir)
-    lineage = lineage or {}
-    if table.current_version() > 0:
-        snap = table.snapshot()
-        if snap.get("summary", {}).get("lineage") != lineage:
-            table.overwrite(build(), summary={"lineage": lineage})
-        elif verify_on_resume:
-            problems = table.verify(spark)
-            if problems:
-                if on_corrupt == "rebuild":
-                    table.overwrite(build(), summary={"lineage": lineage})
-                else:
-                    raise SnapshotIntegrityError(
-                        f"{table_dir}: {'; '.join(problems)}"
-                    )
-    else:
-        table.overwrite(build(), summary={"lineage": lineage})
-    return table.read(spark)

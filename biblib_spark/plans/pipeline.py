@@ -1,31 +1,24 @@
 """End-to-end resumable pipeline: corpus -> parse -> dedupe -> clusters.
 
-Stages checkpoint to ``work_dir`` with _STAGE_OK markers (C8); re-running
-with the same work_dir resumes after the last completed stage. The lineage
-entry records an order-insensitive aggregate of the input content hashes so
-a resume against different input is detectable.
+Each stage checkpoints to ``work_dir`` as an IceTable snapshot (C8,
+plans/checkpoint.py); re-running with the same work_dir resumes after the
+last completed stage. The stage lineage records an order-insensitive hash
+of every corpus column the pipeline reads, and the ``clusters`` stage adds
+the dedup config and ``source_col``, so a resume against different input or
+settings rebuilds instead of returning stale clusters.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from biblib_spark.operators.dedupe import DedupConfig, dedupe_records, records_from_parsed
-from biblib_spark.plans.checkpoint import run_stage
+from biblib_spark.plans.checkpoint import input_lineage, run_stage
 from biblib_spark.sources.parse import parse_with_diagnostics, split_diagnostics
-
-
-def _input_fingerprint(corpus: DataFrame) -> dict:
-    row = corpus.select(
-        F.count(F.lit(1)).alias("n"),
-        # order-insensitive: xor of per-row 64-bit content hashes (xor, not
-        # sum — sum overflows long under ANSI mode)
-        F.expr("bit_xor(xxhash64(content))").alias("hxor"),
-    ).collect()[0]
-    return {"input_rows": row["n"], "input_hash_xor": int(row["hxor"] or 0)}
 
 
 def run_pipeline(
@@ -34,7 +27,6 @@ def run_pipeline(
     work_dir: str,
     cfg: DedupConfig | None = None,
     source_col: str | None = None,
-    table_format: str = "parquet",
 ) -> DataFrame:
     """Returns the clusters DataFrame (rid, cluster_id, is_unique, source).
 
@@ -43,24 +35,13 @@ def run_pipeline(
     quarantine views are filters over that single checkpointed scan.
     ``source_col`` names a corpus column carrying the per-payload source
     register (M12); every citation of a payload inherits it.
-
-    ``table_format='iceberg'`` checkpoints each stage as an IceTable
-    snapshot commit (plans/icetable.py) instead of parquet + _STAGE_OK
-    marker: same resume/lineage/verify contract, plus atomic commits,
-    snapshot isolation against concurrent readers, and time travel across
-    rebuilds — the north_rule's "resumable from checkpoint with
-    per-partition lineage + metrics" in its real-cluster table format.
     """
     cfg = cfg or DedupConfig()
-    lineage = _input_fingerprint(corpus)
-    if table_format == "iceberg":
-        from biblib_spark.plans.icetable import run_stage_ice as stage_fn
-    elif table_format == "parquet":
-        stage_fn = run_stage
-    else:
-        raise ValueError(f"unknown table_format {table_format!r}")
+    lineage = input_lineage(
+        corpus, ["row_id", "content"] + ([source_col] if source_col else [])
+    )
 
-    diag = stage_fn(
+    diag = run_stage(
         spark,
         os.path.join(work_dir, "diagnostics"),
         lambda: parse_with_diagnostics(corpus),
@@ -80,10 +61,9 @@ def run_pipeline(
         joined = parsed.join(reg, parsed["row_id"] == reg["__src_row_id"])
         return records_from_parsed(joined, source_col="__src")
 
-    clusters = stage_fn(
+    return run_stage(
         spark,
         os.path.join(work_dir, "clusters"),
         lambda: dedupe_records(_records(), cfg),
-        lineage,
+        {**lineage, "cfg": dataclasses.asdict(cfg), "source_col": source_col},
     )
-    return clusters

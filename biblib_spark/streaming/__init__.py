@@ -9,7 +9,8 @@ the ``dropDuplicates`` state store; and cross-batch NEAR-dup dedup via
 ``applyInPandasWithState`` keyed by LSH bucket (streaming/stateful.py) — a
 duplicate landing in a later microbatch joins its twin's cluster without
 reprocessing history. Batch resumability lives in
-``biblib_spark.plans.checkpoint``.
+``biblib_spark.plans.checkpoint``; both commit through the same IceTable
+snapshot format (``biblib_spark.plans.icetable``).
 """
 
 from biblib_spark.streaming.ingest import (

@@ -19,9 +19,11 @@ measured 1.18x end-to-end at 32 threads (bench_runs/r04/
 ab_gclocker_summary.json; biblib_spark/session.py bakes the same flag
 into local sessions).
 
-Resumable: re-submitting with the same --work-dir skips completed stages
-(per-partition lineage verified; changed input rebuilds). The clusters
-output lands under <work-dir>/clusters.
+Resumable: every stage is an IceTable snapshot under --work-dir, and
+re-submitting with the same --work-dir skips completed stages (per-file
+lineage verified; changed input, --source-col or dedup settings rebuild, as
+a new snapshot). The clusters table lands under <work-dir>/clusters; read
+it with ``IceTable(<work-dir>/clusters).read(spark)``.
 """
 
 from __future__ import annotations
@@ -48,13 +50,6 @@ def main() -> None:
         action="store_true",
         help="disable M1 year blocking (O(n^2) within blocks becomes global)",
     )
-    ap.add_argument(
-        "--table-format",
-        default="parquet",
-        choices=("parquet", "iceberg"),
-        help="stage checkpoint format: _STAGE_OK-marked parquet or IceTable"
-        " snapshot commits (atomic, time-travelable rebuilds)",
-    )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -72,8 +67,7 @@ def main() -> None:
     # --input may be an IceTable (snapshot-isolated read) or plain parquet
     corpus = read_table_or_parquet(spark, args.input)
     clusters = run_pipeline(
-        spark, corpus, args.work_dir, cfg, source_col=args.source_col,
-        table_format=args.table_format,
+        spark, corpus, args.work_dir, cfg, source_col=args.source_col
     )
     n = clusters.count()
     uniq = clusters.filter("is_unique").count()

@@ -15,10 +15,12 @@ comes from the cluster manager and the input table's partitioning.
 many-threaded executors — see jobs/cluster_submit.py and
 bench_runs/r04/ab_gclocker_summary.json for the measurement.)
 
-Resumable: re-submitting with the same --work-dir skips completed stages
-(per-partition lineage verified; changed input rebuilds — plans/checkpoint.py).
-The clusters output (row_id, cluster_id, cluster_size) lands under
-<work-dir>/clusters.
+Resumable: every stage is an IceTable snapshot under --work-dir, and
+re-submitting with the same --work-dir skips completed stages (per-file
+lineage verified; changed input rebuilds — plans/checkpoint.py). The
+clusters table (row_id, cluster_id, cluster_size) lands under
+<work-dir>/clusters; read it with
+``IceTable(<work-dir>/clusters).read(spark)``.
 
 If the input lacks a ``row_id`` column one is derived as a deterministic
 64-bit hash of (repo, path, commit) — the natural key of a file version per

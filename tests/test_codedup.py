@@ -235,13 +235,13 @@ def test_cluster_sizes_consistent(spark):
 
 def test_code_pipeline_resume_and_parity(spark):
     """C8 on the code arm: staged output == direct operator output; a full
-    resume touches no marker; deleting one stage rebuilds only it."""
+    resume commits no snapshot; deleting one stage rebuilds only it."""
     import os
     import shutil
     import tempfile
 
-    from biblib_spark.plans.checkpoint import read_marker
     from biblib_spark.plans.code_pipeline import run_code_pipeline
+    from biblib_spark.plans.icetable import IceTable
 
     work = tempfile.mkdtemp(prefix="code_pipeline_")
     try:
@@ -256,25 +256,26 @@ def test_code_pipeline_resume_and_parity(spark):
         }
         assert staged == direct and len(staged) > 0
 
-        stages = ("features", "edges", "clusters")
-        for stage in stages:
-            marker = read_marker(os.path.join(work, stage))
-            assert marker["rows"] > 0
-            assert marker["lineage"]["input_rows"] == files.count()
-            assert marker["partitions"]  # per-partition lineage present
-
-        # full resume: markers untouched (structural skip proof, not timing)
-        mtimes = {
-            s: os.path.getmtime(os.path.join(work, s, "_STAGE_OK"))
-            for s in stages
+        tables = {
+            s: IceTable(os.path.join(work, s))
+            for s in ("features", "edges", "clusters")
         }
+        for table in tables.values():
+            snap = table.snapshot()
+            assert snap["rows"] > 0
+            assert snap["summary"]["lineage"]["input_rows"] == files.count()
+            assert snap["manifest"]  # per-partition lineage present
+
+        # full resume: no new snapshot (structural skip proof, not timing)
+        versions = {s: t.current_version() for s, t in tables.items()}
+        assert set(versions.values()) == {1}
         again = {
             (r.row_id, r.cluster_id, r.cluster_size)
             for r in run_code_pipeline(spark, files, work).collect()
         }
         assert again == staged
-        for s, mt in mtimes.items():
-            assert os.path.getmtime(os.path.join(work, s, "_STAGE_OK")) == mt, (
+        for s, v in versions.items():
+            assert tables[s].current_version() == v, (
                 f"stage {s} was rebuilt on resume"
             )
 
@@ -286,20 +287,20 @@ def test_code_pipeline_resume_and_parity(spark):
         }
         assert third == staged
         for s in ("features", "edges"):
-            assert os.path.getmtime(os.path.join(work, s, "_STAGE_OK")) == mtimes[s]
+            assert tables[s].current_version() == versions[s]
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
 def test_code_pipeline_changed_input_rebuilds(spark):
     """Resuming a work_dir against different input must rebuild, not return
-    the stale stage (marker lineage comparison)."""
+    the stale stage (snapshot lineage comparison)."""
     import os
     import shutil
     import tempfile
 
-    from biblib_spark.plans.checkpoint import read_marker
     from biblib_spark.plans.code_pipeline import run_code_pipeline
+    from biblib_spark.plans.icetable import IceTable
 
     work = tempfile.mkdtemp(prefix="code_relineage_")
     try:
@@ -310,7 +311,8 @@ def test_code_pipeline_changed_input_rebuilds(spark):
             spark, make_code_corpus(spark, 90, seed=2), work
         ).count()
         assert n2 != n1  # rebuilt from the new corpus, not resumed
-        marker = read_marker(os.path.join(work, "features"))
-        assert marker["lineage"]["input_rows"] == n2
+        table = IceTable(os.path.join(work, "features"))
+        assert table.snapshot()["summary"]["lineage"]["input_rows"] == n2
+        assert table.current_version() == 2  # a rebuild is a new snapshot
     finally:
         shutil.rmtree(work, ignore_errors=True)

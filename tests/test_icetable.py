@@ -1,16 +1,12 @@
 """Iceberg-style snapshot table: atomic commits, time travel, integrity,
-concurrency (plans/icetable.py — the real-cluster shape of C8)."""
+concurrency (plans/icetable.py — the checkpoint format of C8)."""
 
 import json
 import os
 
 import pytest
 
-from biblib_spark.plans.icetable import (
-    CommitConflict,
-    IceTable,
-    _file_stats,
-)
+from biblib_spark.plans.icetable import CommitConflict, IceTable
 
 
 @pytest.fixture
@@ -80,8 +76,7 @@ def test_commit_conflict_exhausts_retries(spark, table, monkeypatch):
 def test_verify_detects_tamper_and_loss(spark, table):
     table.append(_df(spark, 0, 20))
     assert table.verify(spark) == []
-    files = [e["path"] for e in table.snapshot()["manifest"]]
-    victim = files[0]
+    victim = table.files(table.snapshot())[0]
     os.remove(victim)
     problems = table.verify(spark)
     assert problems and "missing data file" in problems[0]
@@ -90,7 +85,7 @@ def test_verify_detects_tamper_and_loss(spark, table):
 def test_verify_detects_content_drift(spark, table):
     table.append(_df(spark, 0, 20))
     # swap a data file for one with different content but same name
-    victim = table.snapshot()["manifest"][0]["path"]
+    victim = table.files(table.snapshot())[0]
     _df(spark, 900, 905).coalesce(1).write.mode("overwrite").parquet(
         victim + ".swap"
     )
@@ -115,7 +110,7 @@ def test_verify_detects_content_drift(spark, table):
 def test_expire_snapshots_sweeps_unreferenced_files(spark, table):
     table.append(_df(spark, 0, 10))
     table.overwrite(_df(spark, 50, 55))
-    old_files = [e["path"] for e in table.snapshot(1)["manifest"]]
+    old_files = table.files(table.snapshot(1))
     deleted = table.expire_snapshots(keep_last=1)
     assert set(deleted) == set(old_files)
     assert all(not os.path.exists(p) for p in old_files)
@@ -133,28 +128,11 @@ def test_append_after_expire_keeps_lineage(spark, table):
     assert table.read(spark).count() == 10
 
 
-def test_manifest_stats_match_checkpoint_fold(spark, table):
-    """The manifest's per-file (rows, hxor) must equal what the checkpoint
-    marker machinery derives for the same files — one lineage definition."""
-    from biblib_spark.plans.checkpoint import _partition_stats
-
-    table.append(_df(spark, 0, 30))
-    manifest = table.snapshot()["manifest"]
-    df = spark.read.parquet(*[e["path"] for e in manifest])
-    by_name = {
-        os.path.basename(e["path"]): (e["rows"], e["hxor"]) for e in manifest
-    }
-    marker = {
-        k: (v["rows"], v["hxor"]) for k, v in _partition_stats(df).items()
-    }
-    assert by_name == marker
+# ---- run_stage: the pipeline checkpoint contract over snapshots ------------
 
 
-# ---- run_stage_ice: the pipeline checkpoint contract over snapshots --------
-
-
-def test_run_stage_ice_resume_and_lineage(spark, tmp_path):
-    from biblib_spark.plans.icetable import run_stage_ice
+def test_run_stage_resume_and_lineage(spark, tmp_path):
+    from biblib_spark.plans.checkpoint import run_stage
 
     calls = {"n": 0}
 
@@ -164,75 +142,33 @@ def test_run_stage_ice_resume_and_lineage(spark, tmp_path):
 
     d = str(tmp_path / "stage")
     lin = {"input_rows": 12, "input_hash_xor": 7}
-    assert run_stage_ice(spark, d, build, lin).count() == 12
+    assert run_stage(spark, d, build, lin).count() == 12
     assert calls["n"] == 1
     # same lineage -> snapshot verifies -> resumed, not rebuilt
-    assert run_stage_ice(spark, d, build, lin).count() == 12
+    assert run_stage(spark, d, build, lin).count() == 12
     assert calls["n"] == 1
     assert IceTable(d).current_version() == 1
+    assert IceTable(d).snapshot()["summary"]["lineage"] == lin
     # changed input lineage -> rebuild as a NEW snapshot (old one remains
     # time-travelable: rebuilds are commits, not rm-rf)
     lin2 = {"input_rows": 13, "input_hash_xor": 8}
-    assert run_stage_ice(spark, d, build, lin2).count() == 12
+    assert run_stage(spark, d, build, lin2).count() == 12
     assert calls["n"] == 2
     t = IceTable(d)
     assert t.current_version() == 2
     assert t.read(spark, version=1).count() == 12
 
 
-def test_run_stage_ice_integrity(spark, tmp_path):
-    from biblib_spark.plans.icetable import (
-        SnapshotIntegrityError,
-        run_stage_ice,
-    )
+def test_run_stage_integrity(spark, tmp_path):
+    from biblib_spark.plans.checkpoint import StageIntegrityError, run_stage
 
     d = str(tmp_path / "stage")
     lin = {"input_rows": 1}
-    run_stage_ice(spark, d, lambda: _df(spark, 0, 9), lin)
-    victim = IceTable(d).snapshot()["manifest"][0]["path"]
+    run_stage(spark, d, lambda: _df(spark, 0, 9), lin)
+    victim = IceTable(d).files(IceTable(d).snapshot())[0]
     os.remove(victim)
-    with pytest.raises(SnapshotIntegrityError):
-        run_stage_ice(spark, d, lambda: _df(spark, 0, 9), lin)
-    # on_corrupt='rebuild' recommits instead
-    out = run_stage_ice(
-        spark, d, lambda: _df(spark, 0, 9), lin, on_corrupt="rebuild"
-    )
-    assert out.count() == 9
-    assert IceTable(d).verify(spark) == []
-
-
-def test_pipeline_iceberg_backend_matches_parquet(spark, tmp_path):
-    """run_pipeline(table_format='iceberg') produces the same clusters as
-    the parquet backend and resumes without recommitting."""
-    from biblib_spark.corpus import make_corpus
-    from biblib_spark.plans.pipeline import run_pipeline
-
-    corpus = make_corpus(spark, 120, seed=13)
-    wp, wi = str(tmp_path / "pq"), str(tmp_path / "ice")
-    ref = {
-        (r.rid, r.cluster_id)
-        for r in run_pipeline(spark, corpus, wp).collect()
-    }
-    got = {
-        (r.rid, r.cluster_id)
-        for r in run_pipeline(
-            spark, corpus, wi, table_format="iceberg"
-        ).collect()
-    }
-    assert got == ref
-    # resume: same snapshot versions afterwards (nothing recommitted)
-    v_before = [
-        IceTable(os.path.join(wi, s)).current_version()
-        for s in ("diagnostics", "clusters")
-    ]
-    assert v_before == [1, 1]
-    n = run_pipeline(spark, corpus, wi, table_format="iceberg").count()
-    assert n == len(got)
-    v_after = [
-        IceTable(os.path.join(wi, s)).current_version()
-        for s in ("diagnostics", "clusters")
-    ]
-    assert v_after == v_before
+    with pytest.raises(StageIntegrityError, match="missing data file"):
+        run_stage(spark, d, lambda: _df(spark, 0, 9), lin)
 
 
 def test_read_table_or_parquet_sniffs_format(spark, tmp_path):
@@ -300,7 +236,7 @@ def test_verify_reports_truncated_zero_row_file(spark, table):
     """A manifest file emptied to a readable zero-row parquet must be
     reported as drift, not crash the per-file probe (stats[0] IndexError)."""
     table.append(_df(spark, 0, 20))
-    victim = table.snapshot()["manifest"][0]["path"]
+    victim = table.files(table.snapshot())[0]
     empty = _df(spark, 0, 0)
     tmp = victim + ".swap"
     empty.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -329,11 +265,10 @@ def test_empty_commit_reads_back_typed_empty(spark, table):
     assert table.read(spark).count() == 5
 
 
-def test_run_stage_ice_empty_stage_output(spark, tmp_path):
+def test_run_stage_empty_stage_output(spark, tmp_path):
     """A stage whose build genuinely returns zero rows must checkpoint and
-    resume like any other stage (the parquet checkpoint path tolerates
-    this; the icetable path must too)."""
-    from biblib_spark.plans.icetable import run_stage_ice
+    resume like any other stage (an empty manifest reads back typed)."""
+    from biblib_spark.plans.checkpoint import run_stage
 
     calls = {"n": 0}
 
@@ -343,8 +278,8 @@ def test_run_stage_ice_empty_stage_output(spark, tmp_path):
 
     d = str(tmp_path / "stage")
     lin = {"input_rows": 0}
-    assert run_stage_ice(spark, d, build, lin).count() == 0
-    assert run_stage_ice(spark, d, build, lin).count() == 0  # resume
+    assert run_stage(spark, d, build, lin).count() == 0
+    assert run_stage(spark, d, build, lin).count() == 0  # resume
     assert calls["n"] == 1
 
 
@@ -358,3 +293,38 @@ def test_repeated_expiry_is_idempotent(spark, table):
     deleted = table.expire_snapshots(keep_last=1)  # walks over expired v1
     assert table.read(spark).count() == 9
     assert all("/data/" in p or os.sep in p for p in deleted)
+
+
+def test_escaped_and_moved_table_dirs(spark, tmp_path):
+    """``input_file_name()`` percent-encodes a space or ``%`` in the path; a
+    manifest must still name the file on disk. Manifest paths are relative
+    to the table dir, so a stage moved with its work_dir still resumes."""
+    import shutil
+
+    from biblib_spark.plans.checkpoint import run_stage
+
+    root = tmp_path / "a b%41"
+    table = IceTable(str(root / "tbl"))
+    table.append(_df(spark, 0, 10))
+    table.append(_df(spark, 10, 15))
+    assert table.read(spark).count() == 15
+    assert table.verify(spark) == []
+
+    calls = {"n": 0}
+
+    def build():
+        calls["n"] += 1
+        return _df(spark, 0, 12)
+
+    lin = {"input_rows": 12}
+    stage = root / "stage"
+    assert run_stage(spark, str(stage), build, lin).count() == 12
+    assert run_stage(spark, str(stage), build, lin).count() == 12
+    assert calls["n"] == 1
+
+    moved = tmp_path / "moved work" / "stage"
+    moved.parent.mkdir()
+    shutil.move(str(stage), str(moved))
+    got = run_stage(spark, str(moved), build, lin)
+    assert sorted(r.v for r in got.collect()) == list(range(12))
+    assert calls["n"] == 1  # resumed from the moved snapshot, not rebuilt

@@ -9,7 +9,7 @@ import tempfile
 import pytest
 
 from biblib_spark.corpus import make_corpus
-from biblib_spark.plans.checkpoint import read_marker
+from biblib_spark.plans.icetable import IceTable
 from biblib_spark.plans.pipeline import run_pipeline
 
 
@@ -19,30 +19,32 @@ def test_pipeline_resume(spark):
         corpus = make_corpus(spark, 150, seed=11)
         n1 = run_pipeline(spark, corpus, work).count()
         assert n1 > 0
-        for stage in ("diagnostics", "clusters"):
-            marker = read_marker(os.path.join(work, stage))
-            assert "rows" in marker and "lineage" in marker
-            assert marker["lineage"]["input_rows"] == 150
-
-        # full resume: all stages skipped (markers untouched), same rows.
-        # Structural check, not wall-clock — a timing ratio flakes under
-        # suite-wide load; an untouched marker mtime proves the stage was
-        # skipped regardless of scheduler noise.
-        mtimes = {
-            stage: os.path.getmtime(os.path.join(work, stage, "_STAGE_OK"))
-            for stage in ("diagnostics", "clusters")
+        stages = {
+            s: IceTable(os.path.join(work, s)) for s in ("diagnostics", "clusters")
         }
+        for table in stages.values():
+            snap = table.snapshot()
+            assert snap["rows"] > 0 and snap["manifest"]
+            assert snap["summary"]["lineage"]["input_rows"] == 150
+
+        # full resume: all stages skipped (no new snapshot), same rows.
+        # Structural check, not wall-clock — a timing ratio flakes under
+        # suite-wide load; an unchanged snapshot version proves the stage
+        # was skipped regardless of scheduler noise.
+        versions = {s: t.current_version() for s, t in stages.items()}
+        assert versions == {"diagnostics": 1, "clusters": 1}
         n2 = run_pipeline(spark, corpus, work).count()
         assert n2 == n1
-        for stage, mt in mtimes.items():
-            assert (
-                os.path.getmtime(os.path.join(work, stage, "_STAGE_OK")) == mt
-            ), f"stage {stage} was rebuilt on resume"
+        for stage, v in versions.items():
+            assert stages[stage].current_version() == v, (
+                f"stage {stage} was rebuilt on resume"
+            )
 
         # partial resume: only the deleted stage rebuilds, reusing parsed
         shutil.rmtree(os.path.join(work, "clusters"))
         n3 = run_pipeline(spark, corpus, work).count()
         assert n3 == n1
+        assert stages["diagnostics"].current_version() == 1
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -115,14 +117,71 @@ def test_pipeline_source_register(spark):
 
 def test_resume_with_changed_input_rebuilds(spark):
     """C8: a work_dir resumed against DIFFERENT input must rebuild, not
-    silently return the stale stage (marker lineage comparison)."""
+    silently return the stale stage (snapshot lineage comparison)."""
     work = tempfile.mkdtemp(prefix="pipeline_relineage_")
     try:
         n1 = run_pipeline(spark, make_corpus(spark, 60, seed=1), work).count()
         n2 = run_pipeline(spark, make_corpus(spark, 90, seed=2), work).count()
         assert n2 != n1  # rebuilt from the new corpus, not resumed
-        marker = read_marker(os.path.join(work, "diagnostics"))
-        assert marker["lineage"]["input_rows"] == 90
+        lineage = IceTable(os.path.join(work, "diagnostics")).snapshot()[
+            "summary"
+        ]["lineage"]
+        assert lineage["input_rows"] == 90
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_resume_with_changed_config_rebuilds(spark):
+    """The clusters stage's lineage carries the dedup config and the source
+    column: resuming with a source register must not return the clusters of
+    a run without one."""
+    from pyspark.sql import functions as F
+
+    from biblib_spark.operators.dedupe import DedupConfig
+
+    work = tempfile.mkdtemp(prefix="pipeline_recfg_")
+    try:
+        corpus = make_corpus(spark, 80, seed=13).withColumn(
+            "feed", F.concat(F.lit("reg-"), (F.col("row_id") % 2).cast("string"))
+        )
+        run_pipeline(spark, corpus, work).count()
+        cfg = DedupConfig(source_preferences=["reg-1", "reg-0"])
+        out = run_pipeline(spark, corpus, work, cfg, source_col="feed")
+        sources = {r.source for r in out.select("source").distinct().collect()}
+        assert sources == {"reg-0", "reg-1"}
+        lineage = IceTable(os.path.join(work, "clusters")).snapshot()[
+            "summary"
+        ]["lineage"]
+        assert lineage["source_col"] == "feed"
+        assert lineage["cfg"]["source_preferences"] == ["reg-1", "reg-0"]
+        # same settings again: resumed, not recommitted
+        v = IceTable(os.path.join(work, "clusters")).current_version()
+        run_pipeline(spark, corpus, work, cfg, source_col="feed").count()
+        assert IceTable(os.path.join(work, "clusters")).current_version() == v
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_resume_with_shifted_row_ids_rebuilds(spark):
+    """Same payload content under new ``row_id``s is a different input: the
+    resumed clusters carry the new rids, not the stale ones."""
+    from pyspark.sql import functions as F
+
+    work = tempfile.mkdtemp(prefix="pipeline_rerid_")
+    try:
+        corpus = make_corpus(spark, 60, seed=7)
+        first = run_pipeline(spark, corpus, work)
+        rid_range = first.agg(F.min("rid"), F.max("rid")).collect()[0]
+        shifted = corpus.withColumn("row_id", F.col("row_id") + 1000)
+        fresh = {
+            r.rid
+            for r in run_pipeline(
+                spark, shifted, tempfile.mkdtemp(dir=work)
+            ).collect()
+        }
+        resumed = {r.rid for r in run_pipeline(spark, shifted, work).collect()}
+        assert resumed == fresh
+        assert min(resumed) > rid_range[1]  # no stale rid survives
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -131,26 +190,21 @@ def test_resume_detects_tampered_partition(spark):
     """C8: per-partition lineage counters catch a corrupted/replaced file."""
     import glob
 
-    import pytest
-
-    from biblib_spark.plans.checkpoint import (
-        StageIntegrityError,
-        run_stage,
-        verify_stage,
-    )
+    from biblib_spark.plans.checkpoint import StageIntegrityError, run_stage
 
     work = tempfile.mkdtemp(prefix="stage_tamper_")
     path = os.path.join(work, "stage")
     try:
         df = spark.range(0, 1000, numPartitions=4).withColumnRenamed("id", "v")
         run_stage(spark, path, lambda: df)
-        marker = read_marker(path)
-        assert len(marker["partitions"]) >= 2
-        assert marker["rows"] == 1000
-        assert verify_stage(spark, path) == []
+        table = IceTable(path)
+        snap = table.snapshot()
+        assert len(snap["manifest"]) >= 2
+        assert snap["rows"] == 1000
+        assert table.verify(spark) == []
 
         # tamper: replace one data file with a different one
-        files = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
+        files = table.files(snap)
         spark.range(0, 7).withColumnRenamed("id", "v").coalesce(
             1
         ).write.mode("overwrite").parquet(os.path.join(work, "evil"))
@@ -158,17 +212,15 @@ def test_resume_detects_tampered_partition(spark):
         shutil.copyfile(evil, files[0])
         # drop the local-FS checksum sidecar: on S3/HDFS there is none, and
         # the point is that OUR per-partition lineage catches the swap
-        crc = os.path.join(path, f".{os.path.basename(files[0])}.crc")
+        crc = os.path.join(
+            os.path.dirname(files[0]), f".{os.path.basename(files[0])}.crc"
+        )
         if os.path.exists(crc):
             os.remove(crc)
 
-        assert verify_stage(spark, path) != []
+        assert table.verify(spark) != []
         with pytest.raises(StageIntegrityError):
             run_stage(spark, path, lambda: df)
-        # on_corrupt='rebuild' recovers
-        out = run_stage(spark, path, lambda: df, on_corrupt="rebuild")
-        assert out.count() == 1000
-        assert verify_stage(spark, path) == []
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
